@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *     for hot keys); [[runStreamingNearDup]] is the streaming member.
   *   - simhash: narrow map to a 16-bit signature (native `simhash16`);
   *     pairing via banded OR-of-rotations blocking with in-block pairs from
-  *     the native `SimHashPairs` kernel (equi-join keys, block cap).
+  *     the native `SimHashPairsKernel` (equi-join keys, block cap).
   *   - embedding: content-derived banded hyperplane LSH ([[nearDupPairs]]),
   *     one equi-join on (band_idx, band_val).
   *
@@ -96,7 +96,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
 
   /** Distinct word-3-gram shingles of the `text` column — routed through
-    * the native one-pass [[graft.spark.Shingles3]] expression (the HOF form
+    * the native one-pass [[graft.spark.ShinglesKernel]] kernel (the HOF form
     * re-evaluated `split(text, ' ')` inside every lambda element: O(n²)
     * per document). Bit-identical output order to
     * `array_distinct(transform(...))` — pinned by a parity spec.
@@ -154,7 +154,7 @@ object Dedup {
   /** MinHash signature from a prebuilt (doc_id, grams) table:
     * [[minhashHashes]] hashes -> [[minhashBandCount]] band keys (md5 over
     * the '_'-joined band rows). The 16 hash values come from the native
-    * one-pass [[graft.spark.MinHash16]] expression (bit-identical to the
+    * one-pass [[graft.spark.MinHashKernel]] kernel (bit-identical to the
     * `conv(substring(md5-concat...))` SQL form the DuckDB twin still uses —
     * pinned by a parity spec + the oracle hash-compare).
     */
@@ -199,7 +199,10 @@ object Dedup {
     * flattened pair array would materialize as ONE value (at the 10k cap
     * that array is ~50M structs ≈ hundreds of MB in a single row — an
     * executor-OOM cliff exactly at the cap boundary; pinned gone by a plan
-    * spec asserting no `flatten` anywhere).
+    * spec asserting no `flatten` anywhere). NULL band values (docs too
+    * short to shingle, see [[graft.spark.MinHashBandsKernel.bands]]) group
+    * as ONE bucket per band, so such docs all pair with each other; a spec
+    * pins this output.
     */
   def bandsToPairs(sig: DataFrame): DataFrame = {
     val bands = array((0 until minhashBandCount).map(b => col(s"band$b")): _*)
@@ -337,6 +340,7 @@ object Dedup {
     // yields an empty gram array below 3 tokens), preserving the
     // genuinely-NULL band guard of the previous when(mh.isNotNull, ...)
     // form — NULL never equi-joins, so short docs cannot spuriously collide
+    // on the artifact joins (bandsToPairs' groupBy does bucket them)
     val bandCols = (0 until minhashBandCount).map { b =>
       element_at(col("bands"), b + 1).as(s"band$b")
     }
@@ -949,29 +953,16 @@ object Dedup {
   /** 16-bit SimHash over tokens: bit b set iff the majority of token hashes
     * have bit b set (strict majority; tie -> 0). Token hash = first 4 md5 hex
     * chars as int. Routed through the native one-pass
-    * [[graft.spark.SimHash16]] expression — the HOF form ran one md5
+    * [[graft.spark.SimHashKernel]] kernel — the HOF form ran one md5
     * `transform` plus SIXTEEN interpreted `filter` traversals of the
     * token-hash array per document. Bit-identical (pinned by a parity spec
-    * against [[simhashHof]] and by the unchanged DuckDB twin).
+    * against that HOF form and by the unchanged DuckDB twin).
     */
   val simhashBits = 16
 
   def simhash(doc: DataFrame): DataFrame =
     doc.select(col("doc_id"),
       graft.spark.HashFunctions.simHash16(col("text")).as("simhash"))
-
-  /** The interpreted HOF twin of [[simhash]] — kept for the parity spec. */
-  def simhashHof(doc: DataFrame): DataFrame = {
-    val withHashes = doc.select(col("doc_id"),
-      expr("transform(split(text, ' '), t -> CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT))")
-        .as("hs"))
-    val bitTerms = (0 until simhashBits).map { b =>
-      when(expr(s"size(filter(hs, h -> ((h >> $b) & 1) = 1)) * 2 > size(hs)"), 1 << b)
-        .otherwise(0)
-    }
-    withHashes.select(col("doc_id"),
-      bitTerms.reduce(_ + _).cast("int").as("simhash"))
-  }
 
   /** OR-of-rotations SimHash blocking: [[simhashBandCount]] cyclic 8-bit
     * windows of the 16-bit signature at stride 4 (windows starting at bits
@@ -1035,7 +1026,7 @@ object Dedup {
     observeCapDrops(blocks, "simhash", size(col("ms")), simhashMaxBlock)
       .filter(size(col("ms")) > 1 && size(col("ms")) <= simhashMaxBlock)
       // in-block quadratic comparison via the native one-pass
-      // [[graft.spark.SimHashPairs]] kernel: only pairs within maxHamming
+      // [[graft.spark.SimHashPairsKernel]]: only pairs within maxHamming
       // are ever materialized (the HOF form built EVERY in-block pair as an
       // interpreted struct before the filter — blocks cluster to ~700 docs
       // on natural-language signatures, so that was millions of structs)
@@ -1299,14 +1290,14 @@ object Dedup {
   /** The shared doc→blocks projection of [[spanDedup]] /
     * [[spanDedupIncremental]]: narrow posexplode into
     * `(doc_id, pos, block, h)` via the native one-pass
-    * [[graft.spark.SpanBlocks]] kernel (the HOF
+    * [[graft.spark.SpanBlocksKernel]] (the HOF
     * `transform(sequence...slice)` form re-split the text inside every
     * lambda element — interpreted, O(blocks × tokens) per doc; parity
     * spec pins bit-identical output).
     */
   private def spanBlocks(doc: DataFrame): DataFrame =
     doc.select(col("doc_id"),
-        posexplode(graft.spark.HashFunctions.spanBlocks(col("text"), spanTokens))
+        posexplode(graft.spark.HashFunctions.spanBlocks(col("text"), lit(spanTokens)))
           .as(Seq("pos", "block")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("block"),
         md5(col("block")).as("h"))

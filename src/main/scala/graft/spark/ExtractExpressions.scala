@@ -1,9 +1,10 @@
 package graft.spark
 
 import graft.core.Extractor
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -50,9 +51,8 @@ case class ExtractTurnField(
   override def third: Expression = text
   override def fourth: Expression = tool
 
-  // input typing enforced at build time (GraftExtensions.fn) — Spark 4 hides
-  // AbstractDataType (private[spark]), so ExpectsInputTypes is unavailable
-  // to third-party expressions; the builder checks arity and child types.
+  // Spark 4 hides AbstractDataType (private[spark]), so ExpectsInputTypes
+  // is unavailable to third-party expressions: check child types here.
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     val expected = Seq(StringType, IntegerType, StringType, StringType)
     val actual = children.map(_.dataType)
@@ -96,57 +96,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def fn(name: String, which: String) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(classOf[ExtractTurnField].getName, name),
-    (children: Seq[Expression]) => {
-      require(children.length == 4, s"$name(conv_id, turn_idx, text, tool) takes 4 arguments")
-      ExtractTurnField(children(0), children(1), children(2), children(3), which)
-    }
-  )
-
-  private val vecDotFn = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "vec_dot(a, b) takes 2 arguments")
-      VecDot(children(0), children(1))
-    }
-  )
-
-  /** One-arg native kernels, SQL-registered so the whole kernel set is
-    * reachable from pure SQL (not just the DataFrame DSL).
-    */
-  private def unaryFn(name: String, cls: Class[_], build: Expression => Expression) = (
+  /** SQL `name(...)` of exactly `arity` arguments, built by `build`. */
+  private def fn(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression) = (
     FunctionIdentifier(name),
     new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
-      require(children.length == 1, s"$name(x) takes 1 argument")
-      build(children(0))
+      require(children.length == arity, s"$name takes $arity argument(s), got ${children.length}")
+      build(children)
     }
   )
 
+  /** A [[HashFunctions]] kernel as SQL `name(...)`, so the kernel set is
+    * reachable from pure SQL with the DSL's types and NULL semantics.
+    */
+  private def kernelFn(name: String, arity: Int)(build: Seq[Column] => Column) =
+    fn(name, classOf[StaticInvoke], arity)(a =>
+      GraftColumnBridge.expression(build(a.map(GraftColumnBridge.column))))
+
   val functions = Seq(
-    fn("extract_text", "text"), fn("extract_status", "status"), vecDotFn,
-    unaryFn("shingles3", classOf[Shingles3], Shingles3),
-    unaryFn("minhash16", classOf[MinHash16], MinHash16),
-    unaryFn("rolling_hash", classOf[RollingHash], RollingHash),
-    unaryFn("simhash16", classOf[SimHash16], SimHash16),
-    unaryFn("url_canonical", classOf[UrlCanonical], UrlCanonical),
-    (
-      FunctionIdentifier("span_blocks"),
-      new ExpressionInfo(classOf[SpanBlocks].getName, "span_blocks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "span_blocks(text, width) takes 2 arguments")
-        val w = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"span_blocks width must be an int literal, got $other")
-        }
-        SpanBlocks(children(0), w)
-      }
-    ))
+    fn("extract_text", classOf[ExtractTurnField], 4)(a =>
+      ExtractTurnField(a(0), a(1), a(2), a(3), "text")),
+    fn("extract_status", classOf[ExtractTurnField], 4)(a =>
+      ExtractTurnField(a(0), a(1), a(2), a(3), "status")),
+    fn("vec_dot", classOf[VecDot], 2)(a => VecDot(a(0), a(1))),
+    kernelFn("shingles3", 1)(a => HashFunctions.shingles3(a(0))),
+    kernelFn("minhash16", 1)(a => HashFunctions.minHash16(a(0))),
+    kernelFn("rolling_hash", 1)(a => HashFunctions.rollingHash(a(0))),
+    kernelFn("simhash16", 1)(a => HashFunctions.simHash16(a(0))),
+    kernelFn("url_canonical", 1)(a => HashFunctions.urlCanonical(a(0))),
+    kernelFn("span_blocks", 2)(a => HashFunctions.spanBlocks(a(0), a(1))))
 
   /** Imperative registration on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

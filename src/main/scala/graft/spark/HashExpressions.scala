@@ -4,17 +4,41 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
-/** Static kernel the generated (whole-stage codegen) Java calls into. */
-object MinHashKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
+/** The per-thread MD5 digest every hashing kernel shares, and its
+  * lowercase-hex form (== Spark's and DuckDB's `md5()` output).
+  */
+private[spark] object Md5 {
+  private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  def get(): java.security.MessageDigest = digest.get()
+
+  private val hexDigits = "0123456789abcdef".toCharArray
+
+  def hex(d: Array[Byte]): String = {
+    val out = new Array[Char](32)
+    var i = 0
+    while (i < 16) {
+      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
+      out(2 * i + 1) = hexDigits(d(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+}
+
+/** MinHash signature kernel ([[HashFunctions.minHash16]]): the 16 keyed
+  * 32-bit hashes of [[graft.operators.Dedup.minhashSignature]] in one
+  * primitive pass over the shingle array.
+  */
+object MinHashKernel {
   private val salts: Array[Array[Byte]] =
     Array("0:", "1:", "2:", "3:").map(_.getBytes("UTF-8"))
 
@@ -31,7 +55,7 @@ object MinHashKernel {
     */
   def minhash16(grams: ArrayData): ArrayData = {
     val mins = Array.fill(16)(Long.MaxValue)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     var i = 0
     val n = grams.numElements()
     while (i < n) {
@@ -59,35 +83,9 @@ object MinHashKernel {
   }
 }
 
-/** Native codegen'd MinHash signature: the 16 keyed 32-bit hashes of
-  * [[graft.operators.Dedup.minhashSignature]] in one primitive pass over
-  * the shingle array, replacing four md5-building `transform`s plus sixteen
-  * interpreted `array_min(transform(substring...))` traversals per row.
-  * Same "(b) custom Catalyst Expression" tier as [[ExtractTurnField]] /
-  * [[VecDot]]; values are bit-identical to the HOF/DuckDB form (pinned by a
-  * parity spec and the oracle hash-compare).
+/** Word-3-gram shingling kernel ([[HashFunctions.shingles3]]), feeding
+  * [[MinHashKernel]] and the Jaccard verifiers.
   */
-case class MinHash16(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash16 expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(g: Any): Any =
-    MinHashKernel.minhash16(g.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MinHashKernel.minhash16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[Shingles3]]. */
 object ShinglesKernel {
   /** Distinct word-3-gram shingles of `text`, split on single spaces with
     * trailing empties kept (Java `split(" ", -1)` == Spark
@@ -119,31 +117,9 @@ object ShinglesKernel {
   }
 }
 
-/** Native codegen'd word-3-gram shingling (see [[ShinglesKernel.shingles3]]).
-  * Feeds [[MinHash16]] and the Jaccard verifiers; the pair replaces the two
-  * hottest interpreted higher-order chains in the dedup family.
+/** Rolling-hash fingerprint kernel ([[HashFunctions.rollingHash]]), the
+  * per-document primitive of [[graft.operators.TextAnalysis.fingerprint]].
   */
-case class Shingles3(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingles3 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    ShinglesKernel.shingles3(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.ShinglesKernel.shingles3($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[RollingHash]]. */
 object RollingHashKernel {
   /** Polynomial rolling hash h = (h*31 + code) mod 2^31-1 over the
     * characters of `text`, where `code` replicates the HOF form
@@ -170,39 +146,8 @@ object RollingHashKernel {
   }
 }
 
-/** Native codegen'd rolling-hash fingerprint (see
-  * [[RollingHashKernel.rollingHash]]) — the per-document fingerprint
-  * primitive of [[graft.operators.TextAnalysis.fingerprint]], third member
-  * of the one-pass kernel set ([[Shingles3]], [[MinHash16]]).
-  */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(t: Any): Any =
-    RollingHashKernel.rollingHash(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.RollingHashKernel.rollingHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SimHash16]]. */
+/** 16-bit SimHash signature kernel ([[HashFunctions.simHash16]]). */
 object SimHashKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** 16-bit SimHash over single-space tokens in ONE pass. Token hash = the
     * first 16 bits of md5(token) big-endian (== `CAST(conv(substring(
     * md5(t), 1, 4), 16, 10) AS INT)`); signature bit b is set iff a STRICT
@@ -217,7 +162,7 @@ object SimHashKernel {
     val toks = text.toString.split(" ", -1)
     val n = toks.length
     val counts = new Array[Int](16)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     var i = 0
     while (i < n) {
       digestFn.reset()
@@ -240,33 +185,11 @@ object SimHashKernel {
   }
 }
 
-/** Native codegen'd 16-bit SimHash signature (see
-  * [[SimHashKernel.simhash16]]) — fourth member of the one-pass kernel set
-  * ([[Shingles3]], [[MinHash16]], [[RollingHash]]); collapses the
-  * per-document signature from one md5-HOF plus sixteen interpreted filter
-  * traversals to a single pass.
+/** In-block SimHash pairing kernel ([[HashFunctions.simHashPairs]]): the
+  * quadratic block comparison is the dedup family's hottest loop once
+  * blocks cluster (natural-language signatures concentrate: 6k docs put
+  * ~700 in one rotation window at sf0.1).
   */
-case class SimHash16(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(t: Any): Any =
-    SimHashKernel.simhash16(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SimHashKernel.simhash16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SimHashPairs]]. */
 object SimHashPairsKernel {
   /** All (a_id, b_id, hamming) pairs within one block whose hamming
     * distance is <= maxHamming, in one primitive pass over the sorted
@@ -306,43 +229,9 @@ object SimHashPairsKernel {
   }
 }
 
-/** Native codegen'd in-block SimHash pairing (see
-  * [[SimHashPairsKernel.pairs]]) — fifth one-pass kernel; the quadratic
-  * block comparison is the dedup family's hottest loop once blocks cluster
-  * (natural-language signatures concentrate: 6k docs put ~700 in one
-  * rotation window at sf0.1).
-  */
-case class SimHashPairs(child: Expression, maxHamming: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-        if s.length == 2 && s(0).dataType == LongType &&
-          s(1).dataType == org.apache.spark.sql.types.IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_pairs expects array<struct<long,int>>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("a_id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("b_id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("hamming",
-        org.apache.spark.sql.types.IntegerType, nullable = false))),
-    containsNull = false)
-
-  override protected def nullSafeEval(ms: Any): Any =
-    SimHashPairsKernel.pairs(ms.asInstanceOf[ArrayData], maxHamming)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SimHashPairsKernel.pairs($c, $maxHamming)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[UrlCanonical]] — delegates to the unit-tested core
-  * function so the columnar semantics ARE [[graft.core.Urls.canonicalize]].
+/** Crawl-URL canonicalization kernel ([[HashFunctions.urlCanonical]]) —
+  * delegates to the unit-tested core function so the columnar semantics ARE
+  * [[graft.core.Urls.canonicalize]].
   */
 object UrlKernel {
   def canonicalize(url: org.apache.spark.unsafe.types.UTF8String)
@@ -351,32 +240,9 @@ object UrlKernel {
       graft.core.Urls.canonicalize(url.toString))
 }
 
-/** Native codegen'd crawl-URL canonicalization (see
-  * [[graft.core.Urls.canonicalize]]): the dedup-key normalization applied
-  * before URL-level dedup at crawl scale — a narrow map, one kernel call
-  * per row inside whole-stage codegen.
+/** Span-blocking kernel ([[HashFunctions.spanBlocks]]), the hot loop of
+  * the span-dedup family ([[graft.operators.Dedup.spanDedup]]).
   */
-case class UrlCanonical(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"url_canonical expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(u: Any): Any =
-    UrlKernel.canonicalize(u.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.UrlKernel.canonicalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SpanBlocks]]. */
 object SpanBlocksKernel {
   /** Consecutive `width`-token blocks of `text` (single-space split with
     * trailing empties kept — Java `split(" ", -1)` == Spark
@@ -389,6 +255,7 @@ object SpanBlocksKernel {
     */
   def spanBlocks(text: org.apache.spark.unsafe.types.UTF8String,
       width: Int): ArrayData = {
+    require(width > 0, s"span_blocks width must be positive, got $width")
     val toks = text.toString.split(" ", -1)
     val n = toks.length
     val nb = (n - 1) / width + 1
@@ -411,36 +278,11 @@ object SpanBlocksKernel {
   }
 }
 
-/** Native codegen'd span blocking (see [[SpanBlocksKernel.spanBlocks]]) —
-  * the hot loop of the span-dedup family ([[graft.operators.Dedup.spanDedup]]
-  * and its ingest/streaming forms explode every document through it).
-  * Same "(b) custom Catalyst Expression" tier as [[Shingles3]].
+/** Language-ID kernels ([[HashFunctions.langPredict]],
+  * [[HashFunctions.langScores4]]): the mixture key every sampler in
+  * [[graft.operators.Sampling]] keys on.
   */
-case class SpanBlocks(child: Expression, width: Int) extends UnaryExpression {
-  require(width > 0, s"span_blocks width must be positive, got $width")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"span_blocks expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    SpanBlocksKernel.spanBlocks(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], width)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SpanBlocksKernel.spanBlocks($c, $width)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[LangPredict]] / [[LangScores4]]. */
 object LangKernel {
-
   /** word -> bitmask of language indexes (en=1, de=2, es=4, fr=8), built
     * from [[graft.operators.TextAnalysis.langStopwords]] so the kernel can
     * never drift from the declared lists (a spec additionally pins the
@@ -496,7 +338,9 @@ object LangKernel {
   /** Winner-take-first language prediction — the exact
     * [[graft.operators.TextAnalysis.langPredicted]] when-chain (ties to
     * list order; all-zero -> "und") evaluated once per row instead of
-    * re-deriving each stopword count per branch.
+    * re-deriving each stopword count per branch. NULL text is NULL out
+    * (never called), where the interpreted when-chain falls through to
+    * "fr" because every score is NULL; pinned by the lang parity spec.
     */
   def langPredict(text: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.unsafe.types.UTF8String = {
@@ -510,80 +354,11 @@ object LangKernel {
   }
 }
 
-/** Native codegen'd language prediction (see [[LangKernel.langPredict]]) —
-  * the mixture-key expression every sampler keys on
-  * ([[graft.operators.Sampling]] stratified/upweight/temperature/exact-N/
-  * split/budget). The HOF form evaluated up to ~12 interpreted
-  * filter-over-split traversals per reference, and downstream when-chains
-  * referencing the alias multiplied the references.
+/** Winnowed window fingerprinting kernel ([[HashFunctions.winnowFps]]),
+  * the hot loop of [[graft.operators.Dedup.windowDupPairs]] and the
+  * artifact/ingest forms.
   */
-case class LangPredict(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_predict expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(t: Any): Any =
-    LangKernel.langPredict(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.LangKernel.langPredict($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native codegen'd per-language stopword scores (see
-  * [[LangKernel.langScores4]]): array(c_en, c_de, c_es, c_fr) in one token
-  * pass — the langId projection's four HOF columns collapsed to one kernel
-  * call (CSE-eligible, unlike the lambdas).
-  */
-case class LangScores4(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_scores4 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    LangKernel.langScores4(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.LangKernel.langScores4($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[WinnowFps]]. */
 object WinnowKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): String = {
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** The DISTINCT winnowed window fingerprints of `text` in one pass
     * (Schleimer et al. 2003 selection over md5 window fingerprints):
     * every `w`-token window (single-space split, trailing empties kept) is
@@ -612,7 +387,7 @@ object WinnowKernel {
       tokBytes(i) = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       i += 1
     }
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     val digests = new Array[Array[Byte]](nw)
     i = 0
     while (i < nw) {
@@ -637,7 +412,7 @@ object WinnowKernel {
         if (java.util.Arrays.compareUnsigned(digests(j), best) < 0) best = digests(j)
         j += 1
       }
-      seen.add(hex(best))
+      seen.add(Md5.hex(best))
       k += 1
     }
     val out = new Array[Any](seen.size)
@@ -651,65 +426,29 @@ object WinnowKernel {
   }
 }
 
-/** Native codegen'd winnowed window fingerprinting (see
-  * [[WinnowKernel.winnowFps]]) — the hot loop of the winnowed-fingerprint
-  * dedup family ([[graft.operators.Dedup.windowDupPairs]] and the
-  * artifact/ingest forms). The HOF form paid one interpreted md5 + two
-  * array slices per window position per document.
+/** MinHash band-key kernel ([[HashFunctions.minHashBands]]), the banding
+  * half of every minhash artifact/signature build in
+  * [[graft.operators.Dedup]].
   */
-case class WinnowFps(child: Expression, w: Int, s: Int) extends UnaryExpression {
-  require(w > 0 && s > 0, s"winnow_fps needs positive window/stride, got $w/$s")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fps expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    WinnowKernel.winnowFps(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w, s)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.WinnowKernel.winnowFps($c, $w, $s)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[MinHashBands]]. */
 object MinHashBandsKernel {
-
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): String = {
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** The band keys of a shingle array in one pass: the 16
     * [[MinHashKernel.minhash16]] values banded 4x4, band b =
     * md5 hex of the '_'-joined decimal strings of rows [4b, 4b+4) — exactly
     * `md5(concat_ws("_", element_at(mh, i).cast("string")...))`, pinned by
     * a parity spec. EMPTY grams (a doc too short to shingle) yield NULL,
     * the same genuinely-NULL band semantics as the
-    * `when(mh.isNotNull, ...)` guard in the expression form — null never
-    * equi-joins, so short docs can never spuriously collide. One kernel
-    * node replaces the 16-column md5/concat_ws band subtree that every
-    * artifact/signature plan carried.
+    * `when(mh.isNotNull, ...)` guard in the expression form. NULL never
+    * equi-joins, so short docs cannot spuriously collide on the join paths
+    * (incremental dedup, artifact screens); but a `groupBy` on the band
+    * value keeps NULL as one key, so [[graft.operators.Dedup.bandsToPairs]]
+    * puts every short doc in one bucket and pairs them all (pinned by a
+    * spec). One kernel node replaces the 16-column md5/concat_ws band
+    * subtree that every artifact/signature plan carried.
     */
   def bands(grams: ArrayData, bandCount: Int, rowsPerBand: Int): ArrayData = {
     if (grams.numElements() == 0) return null
     val mins = MinHashKernel.minhash16(grams)
-    val digestFn = java.security.MessageDigest.getInstance("MD5")
+    val digestFn = Md5.get()
     val out = new Array[Any](bandCount)
     var b = 0
     while (b < bandCount) {
@@ -722,7 +461,7 @@ object MinHashBandsKernel {
       }
       digestFn.reset()
       out(b) = org.apache.spark.unsafe.types.UTF8String.fromString(
-        hex(digestFn.digest(sb.toString.getBytes(
+        Md5.hex(digestFn.digest(sb.toString.getBytes(
           java.nio.charset.StandardCharsets.UTF_8))))
       b += 1
     }
@@ -730,50 +469,10 @@ object MinHashBandsKernel {
   }
 }
 
-/** Native codegen'd MinHash band keys (see [[MinHashBandsKernel.bands]]) —
-  * the banding half of every minhash artifact/signature build
-  * ([[graft.operators.Dedup]] hashAndBands / signatureFromGrams).
+/** Per-token classifier feature-bucket kernel
+  * ([[HashFunctions.classifierBuckets]]).
   */
-case class MinHashBands(child: Expression, bandCount: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bandCount > 0 && rowsPerBand > 0,
-    s"minhash_bands needs positive geometry, got $bandCount x $rowsPerBand")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(g: Any): Any =
-    MinHashBandsKernel.bands(g.asInstanceOf[ArrayData], bandCount, rowsPerBand)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.spark.MinHashBandsKernel.bands($c, $bandCount, $rowsPerBand);
-         |if (${ev.value} == null) {
-         |  ${ev.isNull} = true;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[ClassifierBuckets]]. */
 object ClassifierBucketsKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** The [[ClassifierScoreKernel]] feature bucket of every single-space
     * token, in token order — one array per document, so classifier
     * training explodes ONE kernel array instead of exploding raw tokens
@@ -783,7 +482,7 @@ object ClassifierBucketsKernel {
   def buckets(text: org.apache.spark.unsafe.types.UTF8String,
       b: Int): ArrayData = {
     val toks = text.toString.split(" ", -1)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     val out = new Array[Any](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -795,32 +494,6 @@ object ClassifierBucketsKernel {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Native codegen'd per-token classifier feature buckets (see
-  * [[ClassifierBucketsKernel.buckets]]).
-  */
-case class ClassifierBuckets(child: Expression, b: Int) extends UnaryExpression {
-  require(b > 0, s"classifier_buckets needs a positive bucket count, got $b")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"classifier_buckets expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    ClassifierBucketsKernel.buckets(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.ClassifierBucketsKernel.buckets($c, $b)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Static kernel for [[TokenSetCount]]. */
@@ -881,12 +554,6 @@ case class TokenSetCount(child: Expression, words: Seq[String]) extends UnaryExp
 
 /** Static kernel for [[ClassifierScore]]. */
 object ClassifierScoreKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Hashed-feature linear score: sum over single-space tokens of
     * `weights[h(t) mod B]` where h(t) = the first 16 bits of md5(t)
     * big-endian (== `CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT)`,
@@ -903,7 +570,7 @@ object ClassifierScoreKernel {
       weights: Array[Long]): Long = {
     val toks = text.toString.split(" ", -1)
     val b = weights.length
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     var acc = 0L
     var i = 0
     while (i < toks.length) {
@@ -949,7 +616,10 @@ case class ClassifierScore(child: Expression, weights: Seq[Long]) extends UnaryE
     copy(child = newChild)
 }
 
-/** Static kernel for [[TextCharPairs]]. */
+/** Adjacent-character-pair kernel ([[HashFunctions.textCharPairs]]), the
+  * per-round hot loop of BPE training
+  * ([[graft.operators.TextAnalysis.bpePairStats]]).
+  */
 object CharPairsKernel {
   /** All adjacent two-code-point pairs of every single-space token with at
     * least two code points, token order then within-token order — the
@@ -984,77 +654,87 @@ object CharPairsKernel {
   }
 }
 
-/** Native codegen'd adjacent-character-pair extraction (see
-  * [[CharPairsKernel.pairs]]) — the per-round hot loop of BPE training
-  * ([[graft.operators.TextAnalysis.bpePairStats]] / `trainBpeMerges`):
-  * one Generate over one kernel array instead of two chained Generates
-  * over an interpreted transform.
+/** DataFrame-DSL access. Every kernel with fixed input types is one
+  * [[kernel]] line; [[tokenSetCount]] and [[classifierScore]] carry
+  * reference objects and keep their own expressions.
   */
-case class TextCharPairs(child: Expression) extends UnaryExpression {
+object HashFunctions {
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"text_char_pairs expects string, got ${other.simpleString}")
+  /** `obj.method(args)` as a Catalyst [[StaticInvoke]]: whole-stage codegen
+    * emits the static call inline, interpreted mode reflects to the same
+    * method, so a new kernel is a static method plus one line here. A NULL
+    * argument yields NULL without calling the kernel; `inputTypes` are
+    * checked at analysis after Spark's implicit casts (so an atomic SQL
+    * argument casts to string, as for Spark's own string functions). Only a
+    * `returnNullable` kernel may itself return null.
+    */
+  private def kernel(obj: AnyRef, method: String, dataType: DataType,
+      args: Seq[Column], inputTypes: Seq[DataType],
+      returnNullable: Boolean = false): Column =
+    GraftColumnBridge.column(StaticInvoke(obj.getClass, dataType, method,
+      args.map(GraftColumnBridge.expression), inputTypes,
+      returnNullable = returnNullable))
+
+  def minHash16(grams: Column): Column = kernel(MinHashKernel, "minhash16",
+    ArrayType(LongType, containsNull = false), Seq(grams), Seq(ArrayType(StringType)))
+
+  def minHashBands(grams: Column, bandCount: Int, rowsPerBand: Int): Column = {
+    require(bandCount > 0 && rowsPerBand > 0,
+      s"minhash_bands needs positive geometry, got $bandCount x $rowsPerBand")
+    kernel(MinHashBandsKernel, "bands", strings, Seq(grams, lit(bandCount), lit(rowsPerBand)),
+      Seq(ArrayType(StringType), IntegerType, IntegerType), returnNullable = true)
   }
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  def shingles3(text: Column): Column =
+    kernel(ShinglesKernel, "shingles3", strings, Seq(text), Seq(StringType))
 
-  override protected def nullSafeEval(t: Any): Any =
-    CharPairsKernel.pairs(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  def rollingHash(text: Column): Column =
+    kernel(RollingHashKernel, "rollingHash", LongType, Seq(text), Seq(StringType))
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.CharPairsKernel.pairs($c)")
+  def simHash16(text: Column): Column =
+    kernel(SimHashKernel, "simhash16", IntegerType, Seq(text), Seq(StringType))
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  /** `ms` is the `array<struct<doc_id: bigint, simhash: int>>` of one block. */
+  def simHashPairs(ms: Column, maxHamming: Int): Column = kernel(SimHashPairsKernel, "pairs",
+    ArrayType(StructType(Seq(StructField("a_id", LongType, nullable = false),
+      StructField("b_id", LongType, nullable = false),
+      StructField("hamming", IntegerType, nullable = false))), containsNull = false),
+    Seq(ms, lit(maxHamming)),
+    Seq(ArrayType(StructType(Seq(StructField("doc_id", LongType),
+      StructField("simhash", IntegerType)))), IntegerType))
 
-/** DataFrame-DSL access. */
-object HashFunctions {
-  def minHashBands(grams: Column, bandCount: Int, rowsPerBand: Int): Column =
-    GraftColumnBridge.column(
-      MinHashBands(GraftColumnBridge.expression(grams), bandCount, rowsPerBand))
+  def urlCanonical(url: Column): Column =
+    kernel(UrlKernel, "canonicalize", StringType, Seq(url), Seq(StringType))
 
-  def classifierBuckets(text: Column, b: Int): Column =
-    GraftColumnBridge.column(ClassifierBuckets(GraftColumnBridge.expression(text), b))
+  def spanBlocks(text: Column, width: Column): Column = kernel(SpanBlocksKernel, "spanBlocks",
+    strings, Seq(text, width), Seq(StringType, IntegerType))
+
+  def langPredict(text: Column): Column =
+    kernel(LangKernel, "langPredict", StringType, Seq(text), Seq(StringType))
+
+  def langScores4(text: Column): Column =
+    kernel(LangKernel, "langScores4", ints, Seq(text), Seq(StringType))
+
+  def winnowFps(text: Column, w: Int, s: Int): Column = {
+    require(w > 0 && s > 0, s"winnow_fps needs positive window/stride, got $w/$s")
+    kernel(WinnowKernel, "winnowFps", strings, Seq(text, lit(w), lit(s)),
+      Seq(StringType, IntegerType, IntegerType))
+  }
+
+  def classifierBuckets(text: Column, b: Int): Column = {
+    require(b > 0, s"classifier_buckets needs a positive bucket count, got $b")
+    kernel(ClassifierBucketsKernel, "buckets", ints, Seq(text, lit(b)),
+      Seq(StringType, IntegerType))
+  }
+
+  def textCharPairs(text: Column): Column =
+    kernel(CharPairsKernel, "pairs", strings, Seq(text), Seq(StringType))
 
   def tokenSetCount(text: Column, words: Seq[String]): Column =
     GraftColumnBridge.column(TokenSetCount(GraftColumnBridge.expression(text), words))
 
   def classifierScore(text: Column, weights: Seq[Long]): Column =
     GraftColumnBridge.column(ClassifierScore(GraftColumnBridge.expression(text), weights))
-
-  def textCharPairs(text: Column): Column =
-    GraftColumnBridge.column(TextCharPairs(GraftColumnBridge.expression(text)))
-
-  def langPredict(text: Column): Column =
-    GraftColumnBridge.column(LangPredict(GraftColumnBridge.expression(text)))
-
-  def langScores4(text: Column): Column =
-    GraftColumnBridge.column(LangScores4(GraftColumnBridge.expression(text)))
-
-  def winnowFps(text: Column, w: Int, s: Int): Column =
-    GraftColumnBridge.column(WinnowFps(GraftColumnBridge.expression(text), w, s))
-
-  def spanBlocks(text: Column, width: Int): Column =
-    GraftColumnBridge.column(SpanBlocks(GraftColumnBridge.expression(text), width))
-
-  def urlCanonical(url: Column): Column =
-    GraftColumnBridge.column(UrlCanonical(GraftColumnBridge.expression(url)))
-
-  def minHash16(grams: Column): Column =
-    GraftColumnBridge.column(MinHash16(GraftColumnBridge.expression(grams)))
-
-  def shingles3(text: Column): Column =
-    GraftColumnBridge.column(Shingles3(GraftColumnBridge.expression(text)))
-
-  def rollingHash(text: Column): Column =
-    GraftColumnBridge.column(RollingHash(GraftColumnBridge.expression(text)))
-
-  def simHash16(text: Column): Column =
-    GraftColumnBridge.column(SimHash16(GraftColumnBridge.expression(text)))
-
-  def simHashPairs(ms: Column, maxHamming: Int): Column =
-    GraftColumnBridge.column(SimHashPairs(GraftColumnBridge.expression(ms), maxHamming))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, HofTwins, Multimodal, Similarity}
 import graft.spark.{ExtractPipeline, Lineage, Transcripts}
 import graft.streaming.StreamPipeline
 import org.apache.spark.sql.SparkSession
@@ -752,13 +752,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Transcripts.documents(spark, sfDir)
     val native = Dedup.simhash(corpus).orderBy("doc_id").collect().toSeq
-    val hof = Dedup.simhashHof(corpus).orderBy("doc_id").collect().toSeq
+    val hof = HofTwins.simhashHof(corpus).orderBy("doc_id").collect().toSeq
     assert(native == hof, "native simhash16 diverged from the HOF form")
     // edge cases: empty text (one empty token), single token, non-ASCII
     val edge = Seq("", "one", "a b a b", "héllo wörld").toDF("text")
       .withColumn("doc_id", monotonically_increasing_id())
     assert(Dedup.simhash(edge).orderBy("doc_id").collect().toSeq ==
-      Dedup.simhashHof(edge).orderBy("doc_id").collect().toSeq)
+      HofTwins.simhashHof(edge).orderBy("doc_id").collect().toSeq)
     // participates in whole-stage codegen
     val plan = Dedup.simhash(corpus).queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"no codegen stage in:\n$plan")
@@ -824,7 +824,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Transcripts.documents(spark, sfDir)
       .select(TextAnalysis.rollingHash(col("text")).as("native"),
-        TextAnalysis.rollingHashHof(col("text")).as("hof"))
+        HofTwins.rollingHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(corpus.count() == 0, "native rolling hash diverged from the HOF fold on the corpus")
     // edge cases: empty string, non-ASCII (Spark 4's ascii() = first code
@@ -833,7 +833,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edge = Seq("", "héllo wörld", "a", "x" * 5000, "emoji 😀 tail")
       .toDF("text")
       .select(TextAnalysis.rollingHash(col("text")).as("native"),
-        TextAnalysis.rollingHashHof(col("text")).as("hof"))
+        HofTwins.rollingHashHof(col("text")).as("hof"))
       .collect()
     edge.foreach(r => assert(r.getLong(0) == r.getLong(1), s"edge mismatch: $r"))
     // participates in whole-stage codegen
@@ -1485,10 +1485,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         doc.filter(pmod(col("doc_id"), lit(3)) === 0))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"), s"no checkpointed artifact scan in:\n$plan")
-    // the signature node is minhash_bands (minhash16 fused inside) since
-    // the banding kernel landed; the invariant is unchanged — exactly one
-    // signature evaluation, on the incoming side
-    val n = "minhash_?bands\\(".r.findAllIn(plan.toLowerCase).length
+    // the signature node is the banding kernel call (minhash16 fused
+    // inside); the invariant is unchanged — exactly one signature
+    // evaluation, on the incoming side
+    val n = "MinHashBandsKernel\\.bands\\(".r.findAllIn(plan).length
     assert(n == 1, s"expected exactly 1 minhash-band eval (incoming side), got $n:\n$plan")
     // artifacts carry GUARDED bands: a too-short-to-shingle doc has NULL
     // band keys, never the md5('') constant concat_ws alone would produce
@@ -2032,7 +2032,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"""transform(sequence(0, CAST((size(split(text, ' ')) - 1) DIV 10 AS INT)),
          |  i -> array_join(slice(split(text, ' '), i * 10 + 1, 10), ' '))""".stripMargin)
     val diff = Transcripts.documents(spark, sfDir)
-      .select(graft.spark.HashFunctions.spanBlocks(col("text"), 10).as("native"),
+      .select(graft.spark.HashFunctions.spanBlocks(col("text"), lit(10)).as("native"),
         hof.as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diff.count() == 0)
@@ -2051,7 +2051,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select((Seq(
         graft.spark.HashFunctions.langScores4(col("text")).as("sc"),
         TextAnalysis.langPredicted.as("native_pred"),
-        TextAnalysis.langPredictedHof.as("hof_pred")) ++ scoreCols): _*)
+        HofTwins.langPredictedHof.as("hof_pred")) ++ scoreCols): _*)
     val diff = d.filter(
       element_at(col("sc"), 1) =!= col("hof_en")
         || element_at(col("sc"), 2) =!= col("hof_de")
@@ -2064,6 +2064,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edge = Seq("", "the", "der und ist", "le les y es the").toDF("text")
       .select(TextAnalysis.langPredicted.as("p")).collect().map(_.getString(0))
     assert(edge.toSeq == Seq("und", "en", "de", "es"))
+    // NULL text: the kernels are NULL in, NULL out; the when-chain twin
+    // falls through to "fr" because every HOF score is NULL
+    val nul = Seq(Option.empty[String]).toDF("text")
+      .select(TextAnalysis.langPredicted.as("native"), HofTwins.langPredictedHof.as("hof"),
+        graft.spark.HashFunctions.langScores4(col("text")).as("sc"))
+      .head
+    assert(nul.isNullAt(0) && nul.getString(1) == "fr" && nul.isNullAt(2), s"$nul")
   }
 
   test("winnow_fps: native winnowing identical to the HOF slice chain") {
@@ -2104,14 +2111,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tsc = d.select(
       graft.spark.HashFunctions.tokenSetCount(col("text"), TextAnalysis.blockedTerms)
         .as("native"),
-      TextAnalysis.blockedTermCountHof.as("hof"))
+      HofTwins.blockedTermCountHof.as("hof"))
     assert(tsc.filter(col("native") =!= col("hof")).count() == 0)
     // classifier_score (untrained weight table) vs the aggregate-HOF chain
     val cs = d.select(
       graft.spark.HashFunctions.classifierScore(col("text"),
         (0 until TextAnalysis.classifierBuckets).map(TextAnalysis.classifierWeight(_).toLong))
         .cast("int").as("native"),
-      TextAnalysis.classifierScoreExprHof.cast("int").as("hof"))
+      HofTwins.classifierScoreExprHof.cast("int").as("hof"))
     assert(cs.filter(col("native") =!= col("hof")).count() == 0)
     // text_char_pairs vs the two-generate HOF multiset (count per pair)
     val hofPairs = d.select(explode(split(col("text"), " ")).as("w"))
@@ -2139,7 +2146,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cents = Similarity.collectCentroidsForTest(emb)
     val checks = (0 until 8).map { j =>
       (Similarity.pqDistArrForTest(cents, j).as(s"n$j"),
-        Similarity.pqDistArrHofForTest(cents, j).as(s"h$j"))
+        HofTwins.pqDistArrHof(cents, j).as(s"h$j"))
     }
     val d = emb.select(checks.flatMap(t => Seq(t._1, t._2)): _*)
     val mismatch = (0 until 8).map(j => col(s"n$j") =!= col(s"h$j")).reduce(_ || _)
@@ -2183,6 +2190,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cmp = natB.join(hofB, Seq("bucket"), "full_outer")
     assert(cmp.filter(col("n_nat").isNull || col("n_hof").isNull
       || col("n_nat") =!= col("n_hof")).count() == 0)
+  }
+
+  test("dedup: bandsToPairs pairs docs too short to shingle (NULL bands are one bucket)") {
+    import spark.implicits._
+    // the banding kernel gives a < 3-token doc NULL bands; groupBy keeps
+    // NULL as a key, so two short docs share every band bucket and pair
+    val sig = Dedup.hashAndBands(Seq((1L, "tiny doc"), (2L, "other")).toDF("doc_id", "text"),
+      Seq(col("doc_id")))
+    assert(sig.filter(col("band0").isNotNull).count() == 0)
+    val pairs = Dedup.bandsToPairs(sig).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toSeq == Seq((1L, 2L)))
   }
 
   test("bloom sizing: artifact-derived filters stay unsaturated where a tiny fixed size floods") {
