@@ -99,7 +99,7 @@ object Bench {
         .extract(spark, Transcripts.fromDocuments(spark, sfDir).limit(500))
         .agg(F.count(F.lit(1))).collect()
       ExtractPipeline // full-size untimed warmup pass
-        .extract(spark, spark.read.parquet(corpusDir), numPartitions = parts)
+        .extract(spark, spark.read.parquet(corpusDir))
         .agg(F.count(F.lit(1))).collect()
       println("GRAFT_READY")
       System.out.flush()
@@ -115,7 +115,7 @@ object Bench {
           val c0 = osBean.getProcessCpuTime
           val t0 = System.nanoTime()
           val row = ExtractPipeline
-            .extract(spark, spark.read.parquet(dir), numPartitions = parts)
+            .extract(spark, spark.read.parquet(dir))
             .agg(F.count(F.lit(1)).as("n"), F.sum(F.length(F.col("text"))).as("chars"))
             .collect()(0)
           val wall = (System.nanoTime() - t0) / 1e9
@@ -708,6 +708,12 @@ object Bench {
            |     storm (70%% system time, 10x slowdown). Fix: Xms=Xmx+AlwaysPreTouch.
            |  3. a 500-row warmup is NOT a warmup: the first full-size pass is
            |     ~1.4x slow (C2/codegen/buffers). Fix: full-size untimed warmup.
+           |  4. the salted repartition shuffled the whole corpus before any turn
+           |     was extracted. The default extraction now runs in place on the
+           |     parquet scan splits (no Exchange): splits are bounded in bytes
+           |     (spark.sql.files.maxPartitionBytes), which bounds each task's
+           |     payload, heavy turns included. The salt applies only when a
+           |     caller asks for a fixed task count (numPartitions > 0).
            |""".stripMargin
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.md"), md)
     } catch { case scala.util.control.NonFatal(_) => () }

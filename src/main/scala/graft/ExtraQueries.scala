@@ -11,16 +11,16 @@ import org.apache.spark.sql.functions._
 object ExtraQueries {
 
   /** Salt invariance: the extraction output must be identical no matter how
-    * the work is distributed (4 vs 16 partitions) — the property the
-    * reference gets for free from per-message queueing and we must guarantee
-    * under salted repartition. Output: one row (n_total, n_mismatch=0).
+    * the work is distributed (in place on the scan splits vs a 16-way salted
+    * repartition) — the property the reference gets for free from
+    * per-message queueing. Output: one row (n_total, n_mismatch=0).
     */
   private def saltInvariance(s: SparkSession, dir: String): DataFrame = {
     val transcripts = Transcripts.fromDocuments(s, dir)
     def run(parts: Int) =
       ExtractPipeline.extract(s, transcripts, numPartitions = parts)
         .select("conv_id", "turn_idx", "text", "status", "engine")
-    val a = run(4).as("a")
+    val a = run(0).as("a")
     val b = run(16).as("b")
     val joined = a.join(b, Seq("conv_id", "turn_idx"), "full")
     // single pass: each pipeline variant executes exactly once

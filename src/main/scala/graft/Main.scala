@@ -20,12 +20,11 @@ import org.apache.spark.sql.functions._
   *                                           partition column either way)
   *   --buckets 256                       \  (lineage/commit granularity)
   *   --max-buckets 0                     \  (0 = all pending; >0 = partial run)
-  *   --parallelism 0                     \  (0 = spark.sql.shuffle.partitions)
-  *   --distribution salted               \  (or heavy-only: light rows are
-  *                                           mapped in place on their scan
-  *                                           splits and only the skew-heavy
-  *                                           payload tail is repartitioned —
-  *                                           the 100 TB-optimal variant; see
+  *   --parallelism 0                     \  (>0 sets spark.sql.shuffle.partitions
+  *                                           for the metrics/histogram
+  *                                           aggregations; extraction itself
+  *                                           runs in place on the scan splits,
+  *                                           no shuffle — see
   *                                           ExtractPipeline.extract)
   * }}}
   *
@@ -122,9 +121,6 @@ object Main {
     val buckets = opts.getOrElse("buckets", "256").toInt
     val maxBuckets = opts.getOrElse("max-buckets", "0").toInt
     val parallelism = opts.getOrElse("parallelism", "0").toInt
-    val distribution = opts.getOrElse("distribution", "salted")
-    require(Set("salted", "heavy-only")(distribution),
-      s"--distribution must be salted or heavy-only (got $distribution)")
 
     val spark = buildSession("graft-extract")
 
@@ -151,12 +147,11 @@ object Main {
       }
     val (lineage, pending) = tables match {
       case Some((dataTable, lineageTable)) =>
-        val l = Lineage.runTable(spark, transcripts, dataTable, lineageTable,
-          buckets, maxB, distribution)
+        val l = Lineage.runTable(spark, transcripts, dataTable, lineageTable, buckets, maxB)
         val done = l.select("bucket").distinct().collect().map(_.getLong(0)).toSet
         (l, (0L until buckets.toLong).filterNot(done))
       case None =>
-        val l = Lineage.run(spark, transcripts, output, buckets, maxB, distribution)
+        val l = Lineage.run(spark, transcripts, output, buckets, maxB)
         (l, Lineage.pendingBuckets(spark, output, buckets))
     }
     if (pending.isEmpty) {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Plan-audit dump: writes `PLANS.md` with the FORMATTED physical plans of
-  * the load-bearing queries, so the shapes the specs assert (one Exchange in
-  * the pipeline, zero Exchange in IVF assignment, pushed filters, pruned
+  * the load-bearing queries, so the shapes the specs assert (zero Exchange in
+  * the pipeline and in IVF assignment, pushed filters, pruned
   * scans, whole-stage codegen spans around the native expressions) are
   * reviewable without running Spark. Regenerate after plan-affecting
   * changes: `sbt "runMain graft.Plans"`.
@@ -33,12 +33,9 @@ object Plans {
     val doc = Transcripts.documents(spark, sfDir)
 
     val sections: Seq[(String, String, String)] = Seq(
-      ("Flagship extraction (salted)",
-        "scan with pruned columns -> ONE Exchange (the salted repartition) -> fused typed map",
+      ("Flagship extraction",
+        "scan with pruned columns -> ONE extraction kernel call per row in the same codegen stage: ZERO Exchange",
         fmt(ExtractPipeline.extract(spark, t).toDF())),
-      ("Extraction, heavy-only distribution",
-        "light rows map in place on their scan splits; only the skew tail shuffles",
-        fmt(ExtractPipeline.extract(spark, t, distribution = "heavy-only").toDF())),
       ("IVF cell assignment",
         "map-side argmax over inlined centroid literals: ZERO Exchange, no Window",
         fmt(Similarity.ivfAssign(emb))),

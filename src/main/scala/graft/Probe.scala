@@ -186,27 +186,6 @@ object Probe {
       println(f"[probe] scan: ${row.getLong(0)} rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       spark.stop()
 
-    case "narrow" =>
-      // scan -> kernel -> agg WITHOUT the salted repartition (no shuffle)
-      import org.apache.spark.sql.Encoders
-      val spark = session(args(1).toInt, args(2).toInt, args(3))
-      implicit val enc = Encoders.product[ExtractPipeline.Extracted]
-      implicit val encIn = Encoders.product[ExtractPipeline.TurnLite]
-      val t0 = System.nanoTime()
-      val row = spark.read.parquet(args(4))
-        .select(F.col("conv_id"), F.col("turn_idx").cast("int").as("turn_idx"),
-          F.col("text"), F.col("tool"))
-        .as[ExtractPipeline.TurnLite]
-        .mapPartitions { rows =>
-          rows.map { t =>
-            val r = Extractor.extractTurn(t.conv_id, t.turn_idx, t.text, t.tool)
-            ExtractPipeline.Extracted(t.conv_id, t.turn_idx, r.text, r.status, r.engine, 0, 0)
-          }
-        }
-        .agg(F.count(F.lit(1)).as("n"), F.sum(F.length(F.col("text"))).as("chars")).collect()(0)
-      println(f"[probe] narrow: ${row.getLong(0)} rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.stop()
-
     case "spark" =>
       val cores = args(1).toInt
       val parts = args(2).toInt

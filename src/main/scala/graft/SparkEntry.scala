@@ -525,9 +525,10 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // SQL surface: the kernel as a registered native Catalyst expression
-    // (ExtractTurnField, codegen'd via doGenCode — no UDF). Same per-turn
-    // semantics as the typed pipeline, driven entirely from SQL.
+    // SQL surface: the kernel as registered native Catalyst expressions
+    // (fields of one ExtractTurnKernel StaticInvoke, codegen'd — no UDF; the
+    // two calls share one kernel call per row). Same per-turn semantics as
+    // the pipeline, driven entirely from SQL.
     "sql_extract_text" -> ((s, dir) => {
       graft.spark.GraftExtensions.register(s)
       Transcripts.fromDocuments(s, dir).createOrReplaceTempView("transcripts_v")

@@ -7,8 +7,10 @@ import graft.model._
   * wrapping. This is the whole reference request lifecycle
   * (`/root/reference/ocr_rpc_client.go:43-195` +
   * `/root/reference/ocr_rpc_worker.go:165-247`) collapsed into one pure
-  * function, so Spark can run it inside a single narrow `mapPartitions`
-  * stage with no per-hop shuffle.
+  * function, so Spark runs it as one kernel call per row
+  * (`graft.spark.ExtractTurnKernel`) in the scan's own codegen stage: no
+  * per-hop shuffle, and by default no shuffle at all — each turn is
+  * extracted on the byte-bounded scan split it was read from.
   */
 object Extractor {
 

@@ -892,7 +892,7 @@ object Dedup {
     * label — every node has exactly one labels row, so min(prev) over the
     * group recovers it past the sentinel on neighbor rows) materializes
     * alongside `label` so convergence is decided from the SAME aggregation.
-    * Exposed for the plan dossier (PLANS.md dumps one round's shape).
+    * Exposed for the plan dossier (`graft.Plans` dumps one round's shape).
     */
   private[graft] def clusterStep(edges: DataFrame, labels: DataFrame): DataFrame = {
     val viaNeighbor = edges

@@ -1,87 +1,45 @@
 package graft.spark
 
-import graft.core.Extractor
+import graft.core.{Engines, Extractor}
 import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, GetStructField}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static forwarders the generated (whole-stage codegen) Java calls into —
-  * a Scala top-level object compiles to a class with true static methods, so
-  * `graft.spark.ExtractTextKernel.evalText(...)` is valid generated code.
+/** The per-turn extraction kernel as one static method, so whole-stage
+  * codegen calls `graft.spark.ExtractTurnKernel.extract(...)` inline (see
+  * [[HashFunctions.extractTurn]]). One call returns every output field:
+  * `struct<text, status, engine, n_chars_in, n_chars_out>`, where the char
+  * counts are Java `String.length` values (UTF-16 units) of the payload
+  * columns and of the extracted text.
   */
-object ExtractTextKernel {
-  private def run(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String) =
-    Extractor.extractTurn(
-      if (convId == null) "" else convId.toString,
-      turnIdx,
-      if (text == null) null else text.toString,
-      if (tool == null) null else tool.toString)
+object ExtractTurnKernel {
+  val dataType: StructType = StructType(Seq(
+    StructField("text", StringType),
+    StructField("status", StringType),
+    StructField("engine", StringType),
+    StructField("n_chars_in", IntegerType, nullable = false),
+    StructField("n_chars_out", IntegerType, nullable = false)))
 
-  def evalText(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String): UTF8String =
-    UTF8String.fromString(run(convId, turnIdx, text, tool).text)
+  private val defaultConfig = Engines.CoreConfig()
+  private val defaultT2p = UTF8String.fromString(defaultConfig.t2pConverter)
 
-  def evalStatus(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String): UTF8String =
-    UTF8String.fromString(run(convId, turnIdx, text, tool).status)
-}
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
+  private def len(s: String): Int = if (s == null) 0 else s.length
 
-/** Native Catalyst expression (NOT a UDF): the per-turn extraction kernel as
-  * a codegen'd scalar function. `doGenCode` emits a direct static call, so
-  * the whole-stage-codegen span stays unbroken around it — the "(b) custom
-  * Catalyst Expression" tier of the build rules (SURVEY.md §7.3; the column
-  * variant of O9-O12).
-  *
-  * `which` selects the output field ("text" | "status") so the expression
-  * stays a simple StringType scalar (struct-returning variants cost an
-  * InternalRow per output and are not needed by the equality contract).
-  */
-case class ExtractTurnField(
-    convId: Expression,
-    turnIdx: Expression,
-    text: Expression,
-    tool: Expression,
-    which: String
-) extends QuaternaryExpression {
-
-  override def first: Expression = convId
-  override def second: Expression = turnIdx
-  override def third: Expression = text
-  override def fourth: Expression = tool
-
-  // Spark 4 hides AbstractDataType (private[spark]), so ExpectsInputTypes
-  // is unavailable to third-party expressions: check child types here.
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val expected = Seq(StringType, IntegerType, StringType, StringType)
-    val actual = children.map(_.dataType)
-    if (actual == expected) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"extract_* expects (string, int, string, string), got (${actual.mkString(", ")})")
+  def extract(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String,
+      t2pConverter: UTF8String): InternalRow = {
+    val (t, o) = (str(text), str(tool))
+    val config =
+      if (defaultT2p == t2pConverter) defaultConfig
+      else Engines.CoreConfig(t2pConverter = str(t2pConverter))
+    val r = Extractor.extractTurn(str(convId), turnIdx, t, o, config)
+    new GenericInternalRow(Array[Any](UTF8String.fromString(r.text),
+      UTF8String.fromString(r.status), UTF8String.fromString(r.engine),
+      len(t) + len(o), len(r.text)))
   }
-  override def dataType: DataType = StringType
-  // null-intolerant semantics: any null child -> null result
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  private val method = if (which == "status") "evalStatus" else "evalText"
-
-  override def nullSafeEval(c: Any, i: Any, t: Any, o: Any): Any =
-    if (which == "status")
-      ExtractTextKernel.evalStatus(c.asInstanceOf[UTF8String], i.asInstanceOf[Int],
-        t.asInstanceOf[UTF8String], o.asInstanceOf[UTF8String])
-    else
-      ExtractTextKernel.evalText(c.asInstanceOf[UTF8String], i.asInstanceOf[Int],
-        t.asInstanceOf[UTF8String], o.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, i, t, o) =>
-      s"graft.spark.ExtractTextKernel.$method($c, $i, $t, $o)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(convId = newFirst, turnIdx = newSecond, text = newThird, tool = newFourth)
 }
 
 /** SQL registration. Two deployment paths:
@@ -113,11 +71,19 @@ object GraftExtensions {
     fn(name, classOf[StaticInvoke], arity)(a =>
       GraftColumnBridge.expression(build(a.map(GraftColumnBridge.column))))
 
+  /** Field `name` of the [[HashFunctions.extractTurn]] struct, NULL in ->
+    * NULL out. Two fields of one row are equal kernel calls, so whole-stage
+    * codegen's subexpression elimination runs the kernel once.
+    */
+  private def extractField(a: Seq[Expression], name: String): Expression = {
+    val c = a.map(GraftColumnBridge.column)
+    GetStructField(GraftColumnBridge.expression(HashFunctions.extractTurn(c(0), c(1), c(2), c(3))),
+      ExtractTurnKernel.dataType.fieldIndex(name), Some(name))
+  }
+
   val functions = Seq(
-    fn("extract_text", classOf[ExtractTurnField], 4)(a =>
-      ExtractTurnField(a(0), a(1), a(2), a(3), "text")),
-    fn("extract_status", classOf[ExtractTurnField], 4)(a =>
-      ExtractTurnField(a(0), a(1), a(2), a(3), "status")),
+    fn("extract_text", classOf[StaticInvoke], 4)(extractField(_, "text")),
+    fn("extract_status", classOf[StaticInvoke], 4)(extractField(_, "status")),
     fn("vec_dot", classOf[VecDot], 2)(a => VecDot(a(0), a(1))),
     kernelFn("shingles3", 1)(a => HashFunctions.shingles3(a(0))),
     kernelFn("minhash16", 1)(a => HashFunctions.minHash16(a(0))),

@@ -6,29 +6,30 @@ import org.apache.spark.sql.functions._
 
 /** The Spark-native extraction pipeline — the whole reference request
   * lifecycle (`/root/reference/ocr_rpc_client.go` + `ocr_rpc_worker.go` +
-  * the preprocessor workers) as ONE fused typed stage:
+  * the preprocessor workers) as ONE narrow codegen'd stage:
   *
-  *   scan -> salted repartition (replaces the RabbitMQ work queue, O16) ->
-  *   mapPartitions(parse + chain + engine, O5-O15/O17) -> write (O18).
+  *   scan -> [[ExtractTurnKernel]] (parse + chain + engine, O5-O15/O17,
+  *   one Catalyst `StaticInvoke` per row) -> write (O18).
   *
   * Scale design notes (100 TB / 10^12 turns):
-  *   - The per-turn path is a NARROW map: exactly one shuffle (the salted
-  *     repartition), no joins, no aggregation. Throughput scales linearly
-  *     with executors as long as partitions are balanced.
-  *   - Skew: the reference has none ("one doc = one worker message"); at
-  *     10^12 turns heavy-tailed payloads would stall partitions. Rows whose
-  *     payload exceeds [[heavyThreshold]] get a PER-ROW salt (uniform
-  *     spread), light rows salt by conv_id (locality for downstream
-  *     conversation-level consumers).
+  *   - The per-turn path is a NARROW map with no key to group on: by default
+  *     every turn is extracted IN PLACE on its scan split — no Exchange, no
+  *     joins, no aggregation. The RabbitMQ work queue (O16) is the scan
+  *     itself: Parquet splits are bounded in bytes
+  *     (`spark.sql.files.maxPartitionBytes`), so a 1 MiB turn counts for its
+  *     size in its split and no task holds more than a split's worth of
+  *     payload. That byte bound is the skew bound; a full-corpus shuffle
+  *     would move every byte once more to buy the same balance.
+  *   - A caller that needs a fixed task count (more tasks than the input has
+  *     row groups, e.g. a one-file derived input) passes `numPartitions`; the
+  *     rows are then salted-repartitioned first ([[saltColumn]]: rows whose
+  *     payload exceeds [[heavyThreshold]] get a PER-ROW salt, light rows
+  *     salt by conv_id). Partitioning never changes per-turn results (pinned
+  *     by spec against the in-place path).
   *   - Correlation-id matching (O17) is row identity through the map — no
   *     result join needed.
   */
 object ExtractPipeline {
-
-  /** Input projection of the transcript table (only the columns the kernel
-    * needs — lets Parquet prune `role`/`ts`).
-    */
-  final case class TurnLite(conv_id: String, turn_idx: Int, text: String, tool: String)
 
   /** Output row + per-row micro-metrics (O22 analog). */
   final case class Extracted(
@@ -42,19 +43,20 @@ object ExtractPipeline {
   )
 
   /** Payloads above this many chars are considered skew-heavy and get a
-    * per-row salt (long-document salting per the north rule).
+    * per-row salt when `extract` repartitions (`numPartitions > 0`).
     */
   val heavyThreshold: Int = 1 << 20
 
-  /** Distribution key for the salted repartition. Full-width hashes, NEVER
-    * pre-modded: collapsing to [0, parts) before `repartition` feeds only
-    * `parts` distinct values into Spark's murmur3-mod-parts partitioner —
-    * balls-in-bins collisions then leave ~1/e of partitions empty and the
-    * busiest with 3-4x the load, which caps scaling at ~25% efficiency the
-    * moment the stage runs in a single wave (measured: 5M turns, local[32],
-    * 75s pre-modded vs 13s full-width). Light rows key by conv_id (locality
-    * for conversation-level consumers), heavy rows by (conv_id, turn_idx) —
-    * per-row spread for the long-document tail.
+  /** Distribution key of the salted repartition (`numPartitions > 0`).
+    * Full-width hashes, NEVER pre-modded: collapsing to [0, parts) before
+    * `repartition` feeds only `parts` distinct values into Spark's
+    * murmur3-mod-parts partitioner — balls-in-bins collisions then leave
+    * ~1/e of partitions empty and the busiest with 3-4x the load, which caps
+    * scaling at ~25% efficiency the moment the stage runs in a single wave
+    * (measured: 5M turns, local[32], 75s pre-modded vs 13s full-width).
+    * Light rows key by conv_id (locality for conversation-level consumers),
+    * heavy rows by (conv_id, turn_idx) — per-row spread for the
+    * long-document tail.
     */
   def saltColumn(): org.apache.spark.sql.Column = {
     val payloadLen = length(coalesce(col("text"), lit(""))) +
@@ -65,76 +67,54 @@ object ExtractPipeline {
 
   /** Run the extraction over a transcript-shaped DataFrame.
     *
-    * `distribution`:
-    *   - `"salted"` (default, the north-rule shape): one full salted
-    *     repartition replaces the reference's work queue — every row
-    *     shuffles once on [[saltColumn]].
-    *   - `"heavy-only"`: the 100 TB-optimal variant — light rows are mapped
-    *     IN PLACE on their scan splits (the scan already distributes; no
-    *     reason to move 100 TB through a shuffle), only the skew-heavy tail
-    *     (payload > [[heavyThreshold]]) is salted-repartitioned per row and
-    *     unioned back. Costs a second pushed-down scan of the predicate
-    *     instead of a full-corpus shuffle write+read. Output is identical
-    *     (pinned by spec) — partitioning never changes per-turn results.
-    */
-  /** O14 with an actual SCHEDULING effect (the reference publishes each
+    * `numPartitions` 0 (the default) extracts every turn in place on its
+    * scan split; `numPartitions > 0` first salted-repartitions the rows into
+    * that many tasks (see the object scaladoc). Either way each row goes
+    * through one [[HashFunctions.extractTurn]] call with NULL propagation
+    * off, so a NULL text or tool is an empty payload.
+    *
+    * O14 with an actual SCHEDULING effect (the reference publishes each
     * message with a priority 0-9 onto an `x-max-priority` queue so
     * high-priority documents are decoded first — `ocr_rpc_client.go:74-85,
     * 294-340`): when `priorityOrdered` is true, rows are sorted within each
-    * post-shuffle partition by descending doc_type priority before the
-    * kernel runs, so high-priority work completes first inside every task.
-    * NO extra shuffle — `sortWithinPartitions` sorts the existing
-    * distribution in place (plan-tested: still exactly one Exchange).
-    * Cross-job preemption (the other half of queue priority) maps to Spark
-    * FAIR scheduler pools at submission time, not to the plan.
+    * partition (the scan split, or the post-shuffle partition) by descending
+    * doc_type priority before the kernel runs, so high-priority work
+    * completes first inside every task. NO extra shuffle —
+    * `sortWithinPartitions` sorts the existing distribution in place
+    * (plan-tested). Cross-job preemption (the other half of queue priority)
+    * maps to Spark FAIR scheduler pools at submission time, not to the plan.
     */
   def extract(
       spark: SparkSession,
       transcripts: DataFrame,
       numPartitions: Int = 0,
       config: Engines.CoreConfig = Engines.CoreConfig(),
-      distribution: String = "salted",
       priorityOrdered: Boolean = false
   ): Dataset[Extracted] = {
     import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val base = transcripts
       .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
         col("text"), col("tool"))
-    val payloadLen = length(coalesce(col("text"), lit(""))) +
-      length(coalesce(col("tool"), lit("")))
-    val prepared = distribution match {
-      case "heavy-only" =>
-        val light = base.filter(payloadLen <= heavyThreshold)
-        val heavy = base.filter(payloadLen > heavyThreshold)
-          .repartition(parts, xxhash64(col("conv_id"), col("turn_idx")))
-        light.unionByName(heavy)
-      case _ =>
-        base.repartition(parts, saltColumn()) // O16: the only shuffle
-    }
+    val spread =
+      if (numPartitions > 0) base.repartition(numPartitions, saltColumn()) // O16
+      else base
     val ordered =
-      if (!priorityOrdered) prepared
+      if (!priorityOrdered) spread
       else {
         val prio = graft.functions.GraftFunctions.priorityFor(
           coalesce(get_json_object(col("tool"), "$.doc_type"), lit("")),
           config.prioMap)
-        prepared.sortWithinPartitions(prio.desc)
+        spread.sortWithinPartitions(prio.desc)
       }
+    // the kernel struct is one column, so the optimizer keeps one kernel
+    // call per row (it never inlines a non-cheap producer read 5 times)
     ordered
-      .as[TurnLite]
-      .mapPartitions { rows =>
-        // one fused iterator: deserialize once, run chain+engine, serialize
-        // once (SURVEY.md §4 whole-stage note)
-        rows.map { t =>
-          val r = Extractor.extractTurn(t.conv_id, t.turn_idx, t.text, t.tool, config)
-          Extracted(
-            t.conv_id, t.turn_idx, r.text, r.status, r.engine,
-            (if (t.text == null) 0 else t.text.length) + (if (t.tool == null) 0 else t.tool.length),
-            if (r.text == null) 0 else r.text.length)
-        }
-      }
+      .select(col("conv_id"), col("turn_idx"),
+        HashFunctions.extractTurn(col("conv_id"), col("turn_idx"), col("text"), col("tool"),
+          lit(config.t2pConverter), propagateNull = false).as("r"))
+      .select(col("conv_id"), col("turn_idx"), col("r.text"), col("r.status"),
+        col("r.engine"), col("r.n_chars_in"), col("r.n_chars_out"))
+      .as[Extracted]
   }
 
   /** O14's CROSS-JOB half — the reference's `x-max-priority` queue also

@@ -1,8 +1,9 @@
 package graft.spark
 
+import graft.core.Engines
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -667,15 +668,30 @@ object HashFunctions {
     * method, so a new kernel is a static method plus one line here. A NULL
     * argument yields NULL without calling the kernel; `inputTypes` are
     * checked at analysis after Spark's implicit casts (so an atomic SQL
-    * argument casts to string, as for Spark's own string functions). Only a
-    * `returnNullable` kernel may itself return null.
+    * argument casts to string, as for Spark's own string functions);
+    * without `propagateNull` a NULL object argument reaches the kernel as
+    * `null`. Only a `returnNullable` kernel may itself return null.
     */
   private def kernel(obj: AnyRef, method: String, dataType: DataType,
       args: Seq[Column], inputTypes: Seq[DataType],
-      returnNullable: Boolean = false): Column =
+      returnNullable: Boolean = false, propagateNull: Boolean = true): Column =
     GraftColumnBridge.column(StaticInvoke(obj.getClass, dataType, method,
       args.map(GraftColumnBridge.expression), inputTypes,
-      returnNullable = returnNullable))
+      propagateNull = propagateNull, returnNullable = returnNullable))
+
+  /** [[ExtractTurnKernel.extract]]: the whole per-turn extraction as one
+    * `struct<text, status, engine, n_chars_in, n_chars_out>`. SQL's
+    * `extract_text`/`extract_status` keep NULL in -> NULL out;
+    * `ExtractPipeline.extract` passes `propagateNull = false`, so a NULL
+    * text or tool is an empty payload, as in `Extractor.extractTurn`.
+    */
+  def extractTurn(convId: Column, turnIdx: Column, text: Column, tool: Column,
+      t2pConverter: Column = GraftColumnBridge.column(Literal(Engines.CoreConfig().t2pConverter)),
+      propagateNull: Boolean = true): Column =
+    kernel(ExtractTurnKernel, "extract", ExtractTurnKernel.dataType,
+      Seq(convId, turnIdx, text, tool, t2pConverter),
+      Seq(StringType, IntegerType, StringType, StringType, StringType),
+      propagateNull = propagateNull)
 
   def minHash16(grams: Column): Column = kernel(MinHashKernel, "minhash16",
     ArrayType(LongType, containsNull = false), Seq(grams), Seq(ArrayType(StringType)))

@@ -64,6 +64,21 @@ object Lineage {
         emptyLineage(spark)
     }
 
+  /** The buckets committed in `lineage`, read in ONE job. Guard: bucket
+    * membership is hash(conv_id) % numBuckets — resuming with a DIFFERENT
+    * numBuckets than the committed lineage would silently reprocess rows
+    * into overlapping buckets (duplicated output), so it is refused.
+    */
+  private def committedBuckets(lineage: DataFrame, numBuckets: Int, what: String): Set[Long] = {
+    val committed = lineage.select("bucket", "n_buckets").distinct().collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val priorBuckets = committed.map(_._2).toSet
+    require(priorBuckets.isEmpty || priorBuckets == Set(numBuckets.toLong),
+      s"$what was committed with numBuckets=${priorBuckets.mkString(",")}; " +
+        s"resume must use the same value (got $numBuckets)")
+    committed.map(_._1).toSet
+  }
+
   /** Process up to `maxBucketsThisRun` pending buckets; returns the lineage
     * table after this run. Call repeatedly (or after a crash) until
     * `pendingBuckets` is empty.
@@ -73,28 +88,15 @@ object Lineage {
       transcripts: DataFrame,
       outDir: String,
       numBuckets: Int = 8,
-      maxBucketsThisRun: Int = Int.MaxValue,
-      distribution: String = "salted"
+      maxBucketsThisRun: Int = Int.MaxValue
   ): DataFrame = {
-    val existing = readLineage(spark, outDir)
-    // Guard: bucket membership is hash(conv_id) % numBuckets — resuming with
-    // a DIFFERENT numBuckets than the committed lineage would silently
-    // reprocess rows into overlapping buckets (duplicated output).
-    val priorBuckets: Set[Long] =
-      if (existing.columns.contains("n_buckets"))
-        existing.select("n_buckets").distinct().collect().map(_.getLong(0)).toSet
-      else Set.empty
-    require(priorBuckets.isEmpty || priorBuckets == Set(numBuckets.toLong),
-      s"lineage at $outDir was committed with numBuckets=${priorBuckets.mkString(",")}; " +
-        s"resume must use the same value (got $numBuckets)")
-    val done: Set[Long] = existing
-      .select("bucket").distinct().collect().map(_.getLong(0)).toSet
+    val done = committedBuckets(readLineage(spark, outDir), numBuckets, s"lineage at $outDir")
     val pending = (0L until numBuckets.toLong).filterNot(done).take(maxBucketsThisRun)
     if (pending.nonEmpty) {
       // ONE job for every pending bucket: the hash-bucket predicate can't be
       // pushed into parquet, so it must not be evaluated once per bucket
       val subset = transcripts.filter(bucketCol(numBuckets).isin(pending: _*))
-      val extracted = ExtractPipeline.extract(spark, subset, distribution = distribution)
+      val extracted = ExtractPipeline.extract(spark, subset)
         .withColumn("bucket", bucketCol(numBuckets)) // recompute from conv_id
         .sortWithinPartitions("conv_id", "turn_idx")
       extracted.write.mode("overwrite")
@@ -180,21 +182,14 @@ object Lineage {
       dataTable: String,
       lineageTable: String,
       numBuckets: Int = 8,
-      maxBucketsThisRun: Int = Int.MaxValue,
-      distribution: String = "salted"
+      maxBucketsThisRun: Int = Int.MaxValue
   ): DataFrame = {
-    val existing = readLineageTable(spark, lineageTable)
-    val priorBuckets: Set[Long] =
-      existing.select("n_buckets").distinct().collect().map(_.getLong(0)).toSet
-    require(priorBuckets.isEmpty || priorBuckets == Set(numBuckets.toLong),
-      s"lineage table $lineageTable was committed with numBuckets=" +
-        s"${priorBuckets.mkString(",")}; resume must use the same value (got $numBuckets)")
-    val done: Set[Long] = existing
-      .select("bucket").distinct().collect().map(_.getLong(0)).toSet
+    val done = committedBuckets(readLineageTable(spark, lineageTable), numBuckets,
+      s"lineage table $lineageTable")
     val pending = (0L until numBuckets.toLong).filterNot(done).take(maxBucketsThisRun)
     if (pending.nonEmpty) {
       val subset = transcripts.filter(bucketCol(numBuckets).isin(pending: _*))
-      val extracted = ExtractPipeline.extract(spark, subset, distribution = distribution)
+      val extracted = ExtractPipeline.extract(spark, subset)
         .withColumn("bucket", bucketCol(numBuckets))
         .sortWithinPartitions("conv_id", "turn_idx")
       if (!spark.catalog.tableExists(dataTable)) {

@@ -1,10 +1,11 @@
 package graft
 
+import graft.core.{Extractor, Payload, Pdf}
 import graft.operators.{Dedup, HofTwins, TextAnalysis}
 import graft.spark.HashFunctions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * several thousand tokens and a batch of mixed texts. Each kernel must
   * equal the reference form its fixture spec in [[PipelineSpec]] uses, be
   * NULL on NULL text, and give the same values interpreted (local
-  * relation) as under whole-stage codegen (RDD scan).
+  * relation) as under whole-stage codegen (RDD scan). The extraction
+  * kernel has its own property against `Extractor.extractTurn`.
   */
 class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -156,6 +158,58 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     "PUA/multi-byte, several thousand tokens)") {
     val prop = Prop.forAllNoShrink(docs) { rows =>
       val bad = mismatches(rows)
+      Prop(bad.isEmpty) :| bad.take(5).mkString("\n")
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(3), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+  /** One sample's turns as (text, tool); `None` is a NULL column. The first
+    * two rows pin supplementary-plane text (UTF-16 length != code points)
+    * and an all-NULL payload.
+    */
+  private val turns: Gen[Seq[(Option[String], Option[String])]] = {
+    val tool: Gen[Option[String]] = Gen.oneOf(
+      Gen.const(None), Gen.const(Some("")), Gen.const(Some("{not json")),
+      Gen.oneOf("mock", "tesseract", "go_tesseract", "nope").map(e => Some(s"""{"engine":"$e"}""")),
+      textOf(Gen.choose(1, 20)).map(t => Some(s"""{"engine":"sandwich","img_base64":""" +
+        s""""${Payload.encodeBase64(Pdf.synthesize(t))}","engine_args":{"ocr_type":"txt"}}""")))
+    val text: Gen[Option[String]] =
+      Gen.frequency(1 -> Gen.const(None), 6 -> textOf(Gen.choose(0, 40)).map(Some(_)))
+    Gen.listOfN(40, Gen.zip(text, tool))
+      .map(Seq(Some("a😀b 😀") -> Some("""{"engine":"mock"}"""), None -> None) ++ _)
+  }
+
+  private def turnMismatches(rows: Seq[(Option[String], Option[String])]): Seq[String] = {
+    val schema = StructType(Seq(StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+      StructField("text", StringType), StructField("tool", StringType)))
+    val data = rows.zipWithIndex.map { case ((t, o), i) => Row(s"c${i % 3}", i, t.orNull, o.orNull) }
+    val local = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+    val scanned = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+    def run(df: DataFrame, propagateNull: Boolean) = df
+      .select(col("turn_idx"), extractTurn(col("conv_id"), col("turn_idx"), col("text"), col("tool"),
+        propagateNull = propagateNull).as("r"))
+      .collect().map(r => r.getInt(0) -> Option(r.getStruct(1)).map(_.toSeq)).toMap
+    val codegen = run(scanned, propagateNull = false)
+    val interpreted = run(local, propagateNull = false)
+    val strict = run(scanned, propagateNull = true)
+    val bad = Seq.newBuilder[String]
+    for (((t, o), i) <- rows.zipWithIndex) {
+      val r = Extractor.extractTurn(s"c${i % 3}", i, t.orNull, o.orNull)
+      val want = Some(Seq(r.text, r.status, r.engine,
+        t.fold(0)(_.length) + o.fold(0)(_.length), Option(r.text).fold(0)(_.length)))
+      val show = (t.map(_.take(60)), o.map(_.take(60)))
+      if (codegen(i) != want) bad += s"codegen on $show: ${codegen(i)}, reference $want"
+      if (interpreted(i) != want) bad += s"interpreted on $show: ${interpreted(i)}, reference $want"
+      val strictWant = if (t.isEmpty || o.isEmpty) None else want
+      if (strict(i) != strictWant) bad += s"NULL-propagating on $show: ${strict(i)}, want $strictWant"
+    }
+    bad.result()
+  }
+
+  // NULL text/tool, bad JSON, every engine, supplementary-plane n_chars
+  test("extraction kernel equals Extractor.extractTurn on generated turns") {
+    val prop = Prop.forAllNoShrink(turns) { rows =>
+      val bad = turnMismatches(rows)
       Prop(bad.isEmpty) :| bad.take(5).mkString("\n")
     }
     val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(3), prop)

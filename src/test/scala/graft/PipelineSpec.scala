@@ -105,23 +105,23 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("lineage: heavy-only distribution resumes to the same output as salted") {
-    // the 100 TB-optimal variant (--distribution heavy-only via graft.Main):
-    // light rows map in place on their scan splits, only the heavy payload
-    // tail repartitions — crash + resume must still commit identical output
+  test("lineage: crash + resume through the in-place default commits the salted output") {
+    // Lineage.run extracts in place on the scan splits (no shuffle); a crash
+    // after 3 buckets plus a resume must still commit exactly what the
+    // salted reference (numPartitions = 7) produces
     val t = Transcripts.fromDocuments(spark, sfDir)
-    val salted = tmpDir("graft_ho_salted_")
-    Lineage.run(spark, t, salted, numBuckets = 8)
-    val heavyOnly = tmpDir("graft_ho_")
-    Lineage.run(spark, t, heavyOnly, numBuckets = 8, maxBucketsThisRun = 3,
-      distribution = "heavy-only")
-    assert(Lineage.pendingBuckets(spark, heavyOnly, 8).size == 5)
-    Lineage.run(spark, t, heavyOnly, numBuckets = 8, distribution = "heavy-only")
-    assert(Lineage.pendingBuckets(spark, heavyOnly, 8).isEmpty)
-    def rows(dir: String) = Lineage.readOutput(spark, dir)
-      .select("conv_id", "turn_idx", "text", "status", "engine")
+    val out = tmpDir("graft_inplace_")
+    Lineage.run(spark, t, out, numBuckets = 8, maxBucketsThisRun = 3)
+    assert(Lineage.pendingBuckets(spark, out, 8).size == 5)
+    Lineage.run(spark, t, out, numBuckets = 8)
+    assert(Lineage.pendingBuckets(spark, out, 8).isEmpty)
+    val cols = Seq("conv_id", "turn_idx", "text", "status", "engine", "n_chars_in", "n_chars_out")
+    val committed = Lineage.readOutput(spark, out).select(cols.map(col): _*)
       .orderBy("conv_id", "turn_idx").collect().toSeq
-    assert(rows(heavyOnly) == rows(salted))
+    val salted = ExtractPipeline.extract(spark, t, numPartitions = 7).select(cols.map(col): _*)
+      .orderBy("conv_id", "turn_idx").collect().toSeq
+    assert(committed.size == t.count())
+    assert(committed == salted)
   }
 
   test("lineage: catalog-table path — crash + resume equals the path-based output") {
@@ -345,7 +345,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == t.count())
   }
 
-  test("plan: scan prunes to needed columns and the pipeline has exactly one shuffle") {
+  test("plan: scan prunes to needed columns and the pipeline has no shuffle") {
     val t = Transcripts.fromDocuments(spark, sfDir)
     val ds = ExtractPipeline.extract(spark, t)
     val plan = ds.queryExecution.executedPlan.toString
@@ -355,8 +355,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readSchemas.contains("doc_id") && readSchemas.contains("text"))
     assert(!readSchemas.contains("lang") && !readSchemas.contains("source")
       && !readSchemas.contains("n_chars"))
-    // exactly ONE exchange: the salted repartition (O16); no hidden shuffles
-    assert("Exchange".r.findAllMatchIn(plan).length == 1, s"plan:\n$plan")
+    // ZERO exchanges: every turn is extracted on its scan split
+    assert(!plan.contains("Exchange"), s"plan:\n$plan")
+    // the kernel runs inside a whole-stage codegen stage ("*(n)" marker)
+    val kernelLine = plan.linesIterator.find(_.contains("ExtractTurnKernel.extract("))
+    assert(kernelLine.exists(_.contains("*(")), s"kernel outside a codegen stage:\n$plan")
   }
 
   test("plan: predicate pushdown reaches the parquet scan") {
@@ -394,6 +397,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("conv_id", "turn_idx", "text", "status")
       .orderBy("conv_id", "turn_idx")
     assert(sqlRows == viaPipeline.collect().toSeq)
+  }
+
+  test("sql: extract_text and extract_status share one kernel call per row") {
+    // both SQL functions are fields of the same ExtractTurnKernel
+    // StaticInvoke, so whole-stage codegen's subexpression elimination
+    // emits ONE call site; count generated code lines, not the plan-string
+    // comments around them
+    val df = SparkEntry.queries("sql_extract_text")(spark, sfDir)
+    df.collect()
+    val code = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+    val calls = code.linesIterator
+      .collect { case l if l.matches("""^/\* \d+ \*/.*""") => l.replaceFirst("""^/\* \d+ \*/""", "") }
+      .map(_.replaceAll("""/\*.*?\*/""", "").replaceAll("//.*$", ""))
+      .map(l => java.util.regex.Pattern.quote("graft.spark.ExtractTurnKernel.extract(").r
+        .findAllMatchIn(l).length).sum
+    assert(calls == 1, s"kernel call sites in generated code: $calls\n$code")
   }
 
   test("streaming: availableNow extraction equals the batch result") {
@@ -526,8 +545,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = rows.toDF("conv_id", "turn_idx", "text", "tool")
     val cfg = Engines.CoreConfig(prioMap = Map("standard" -> 1, "egov" -> 9))
-    val ds = ExtractPipeline.extract(spark, df, numPartitions = 4, config = cfg,
-      priorityOrdered = true)
+    val ds = ExtractPipeline.extract(spark, df, config = cfg, priorityOrdered = true)
     // encounter order within each task: monotonically_increasing_id is
     // assigned in iteration order inside the same narrow stage, so every
     // egov (prio 9) row must appear before every standard (prio 1) row
@@ -542,10 +560,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("last_high").isNotNull && col("first_low").isNotNull)
     assert(observed.filter(col("last_high") > col("first_low")).count() == 0,
       "a standard-priority row ran before an egov row in some partition")
-    // the priority sort adds NO shuffle: still exactly one Exchange
+    // the priority sort adds NO shuffle: the scan splits are sorted in place
     val plan = ds.queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllMatchIn(plan).length == 1, s"plan:\n$plan")
+    assert(!plan.contains("Exchange"), s"plan:\n$plan")
     assert(plan.contains("Sort"), s"expected an in-partition Sort in:\n$plan")
+    val kernelLine = plan.linesIterator.find(_.contains("ExtractTurnKernel.extract("))
+    assert(kernelLine.exists(_.contains("*(")), s"kernel outside a codegen stage:\n$plan")
   }
 
   test("priority: cross-job FAIR pool assignment per doc_type class") {
@@ -575,18 +595,42 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sc.getPoolForName("prio-0").map(_.weight).contains(1))
   }
 
-  test("distribution: heavy-only (no full shuffle) equals the salted pipeline") {
-    val t = Transcripts.fromDocuments(spark, sfDir)
-    def rows(mode: String) =
-      ExtractPipeline.extract(spark, t, distribution = mode)
-        .select("conv_id", "turn_idx", "text", "status", "engine")
-        .orderBy("conv_id", "turn_idx").collect().toSeq
-    assert(rows("heavy-only") == rows("salted"))
-    // and the light path really avoids shuffling the corpus: the only
-    // Exchange in the heavy-only plan hangs off the heavy-filter branch
-    val plan = ExtractPipeline.extract(spark, t, distribution = "heavy-only")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllMatchIn(plan).length == 1)
+  test("distribution: in-place default equals salted at 1 MB and 128 MB scan splits") {
+    import spark.implicits._
+    // turns above heavyThreshold (per-row salt on the salted path), NULL
+    // text/tool, multi-byte and supplementary-plane text, next to the corpus
+    val heavy = "h" * (ExtractPipeline.heavyThreshold + 1)
+    val extra = Seq[(String, Int, String, String)](
+      ("conv-x", 0, heavy, ""),
+      ("conv-x", 1, heavy, """{"engine":"mock"}"""),
+      ("conv-x", 2, null, null),
+      ("conv-y", 0, null, """{"engine":"tesseract"}"""),
+      ("conv-y", 1, "héllo wörld 中文 😀 ß", null),
+      ("conv-y", 2, "a😀b " * 1000, """{"engine":"tesseract"}""")
+    ).toDF("conv_id", "turn_idx", "text", "tool")
+    val dir = tmpDir("graft_dist_")
+    Transcripts.fromDocuments(spark, sfDir).select("conv_id", "turn_idx", "text", "tool")
+      .unionByName(extra).repartition(3).write.mode("overwrite").parquet(dir)
+    val cols = Seq("conv_id", "turn_idx", "text", "status", "engine", "n_chars_in", "n_chars_out")
+    def rows(parts: Int) = ExtractPipeline.extract(spark, spark.read.parquet(dir), parts)
+      .select(cols.map(col): _*).orderBy("conv_id", "turn_idx").collect().toSeq
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      val salted = rows(7)
+      assert(salted.size == spark.read.parquet(dir).count())
+      // the NULL payloads and the supplementary-plane text went through
+      assert(salted.exists(r => r.getString(0) == "conv-x" && r.getInt(1) == 2))
+      assert(salted.exists(r => r.getString(0) == "conv-y" && r.getInt(1) == 2 &&
+        r.getInt(5) == ("a😀b " * 1000).length + """{"engine":"tesseract"}""".length))
+      for (mb <- Seq("1m", "128m")) {
+        spark.conf.set(key, mb)
+        assert(rows(0) == salted, s"in-place output differs at maxPartitionBytes=$mb")
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("plan: ivf assignment is a pure narrow map (zero Exchange, no Window)") {
